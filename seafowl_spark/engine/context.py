@@ -2,16 +2,18 @@
 catalog and deltalite storage.
 
 Query lifecycle mirrors the reference (SURVEY.md §3.1): per statement we
-(a) refresh the visible catalog into temp views (reference reload_schema,
-src/context/mod.rs:89-112 — cheap here because temp views are plan
-aliases), (b) rewrite time-travel sugar, (c) hand reads to `spark.sql`
-(Catalyst = DataFusion's role), and (d) interpret DDL/DML ourselves,
-eagerly, returning row-count style results (reference executes DML during
+(a) find what it reads — the relations Spark's own parser reports, closed
+over views' stored queries — and bind exactly those as temp views (the
+reference reloads its whole catalog, src/context/mod.rs:89-112; here the
+cost follows the tables a statement touches, not the catalog's size),
+(b) rewrite time-travel sugar, (c) hand reads to `spark.sql` (Catalyst =
+DataFusion's role), and (d) interpret DDL/DML ourselves, eagerly,
+returning row-count style results (reference executes DML during
 physical planning, physical.rs:68-73).
 
 Name resolution: Spark temp views are single-part, so qualified references
 `schema.table` (and `db.schema.table`) are rewritten to mangled view names
-before parsing — same effect as the reference's schema providers.
+before analysis — same effect as the reference's schema providers.
 """
 
 from __future__ import annotations
@@ -21,10 +23,12 @@ import os
 import re
 import threading
 from contextlib import contextmanager
-from dataclasses import dataclass
+from collections import Counter
+from dataclasses import dataclass, field
 from typing import Any
 from hashlib import sha256
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
@@ -38,8 +42,8 @@ from .catalog import (
     CatalogError,
     TableEntry,
 )
-from .deltalite import DeltaLiteTable, DeltaLiteError
-from .types import columns_to_schema
+from .deltalite import DeltaLiteTable, DeltaLiteError, Snapshot
+from .types import columns_to_schema, schema_ddl
 
 
 class ExecutionError(Exception):
@@ -51,8 +55,8 @@ class ExecutionError(Exception):
 # property stores ZERO rows — reload_views re-expands the query instead
 VIEW_PROP = "view_sql"
 
-# static name sets of the lazily-registered introspection views (r14):
-# must match the dict keys _system_tables() / _information_schema() build
+# the introspection views a statement may name: must match the dict keys
+# _system_tables() / _information_schema() build
 _SYSTEM_TABLE_NAMES = (
     "table_versions",
     "dropped_tables",
@@ -66,6 +70,38 @@ _INFO_SCHEMA_NAMES = (
     "table_constraints",
     "check_constraints",
 )
+# parser-rendered reference -> (schema, name), see parser.relation_refs
+_INTROSPECTION = {
+    f"[{schema}, {name}]": (schema, name)
+    for schema, names in (
+        (SYSTEM_SCHEMA, _SYSTEM_TABLE_NAMES),
+        ("information_schema", _INFO_SCHEMA_NAMES),
+    )
+    for name in names
+}
+_PLAIN_NAME = r"[A-Za-z_][A-Za-z0-9_]*"
+
+_SEARCH_CALL = re.compile(
+    r"(?i)\bsearch_index\s*\(\s*"
+    r"'((?:[^']|'')*)'\s*,\s*"
+    r"'((?:[^']|'')*)'\s*,\s*"
+    r"'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)"
+)
+
+
+def _search_calls(sql: str) -> list[tuple[int, int, str, str, str, int]]:
+    """Every ``search_index('tbl', 'idx', 'query', k)`` call in ``sql`` as
+    (start, end, table, index, query, k), arguments unescaped. A match
+    counts only when it starts outside every quoted span the parser's
+    quote scanner yields (call-shaped text inside a literal is no call)."""
+    spans = parser.scan_quotes(sql)
+    calls = []
+    for m in _SEARCH_CALL.finditer(sql):
+        if any(a <= m.start() < b for _k, a, b in spans):
+            continue
+        tbl, idx, query = (m.group(i).replace("''", "'") for i in (1, 2, 3))
+        calls.append((m.start(), m.end(), tbl, idx, query, int(m.group(4))))
+    return calls
 
 
 def _mangle(schema: str, name: str) -> str:
@@ -139,6 +175,16 @@ def _where_fully_shippable(pred: str, schema: T.StructType) -> bool:
 
 
 @dataclass
+class _Closure:
+    """What one statement reads (SeafowlContext._closure)."""
+
+    # (entry, snapshot) per catalog table, each after everything it reads
+    tables: list[tuple[TableEntry, Snapshot]] = field(default_factory=list)
+    staging: set[str] = field(default_factory=set)
+    introspection: set[tuple[str, str]] = field(default_factory=set)
+
+
+@dataclass
 class StatementResult:
     """Non-query statements return a one-row summary (count-style)."""
 
@@ -160,13 +206,9 @@ class SeafowlContext:
         self.catalog = Catalog(catalog_path or os.path.join(self.data_dir, "catalog.sqlite"))
         self.database = DEFAULT_DB
         self.search_schema = DEFAULT_SCHEMA
-        # per-reload snapshot properties (uuid -> dict): lets
-        # information_schema surface constraints without replaying every
-        # table's log a second time per statement
-        self._props_cache: dict = {}
-        # per-reload snapshot fingerprints for indexed tables (avoids a
-        # second full log replay per statement in system.search_indexes)
-        self._snap_fp_cache: dict = {}
+        # the session's SQL parser: the one source of what a statement
+        # references (_closure)
+        self._sql_parser = spark._jsparkSession.sessionState().sqlParser()
         # python UDFs run arbitrary source via exec(); embedders get them by
         # default, network frontends must opt in explicitly (tools/serve.py)
         self.allow_python_udfs = allow_python_udfs
@@ -207,14 +249,27 @@ class SeafowlContext:
     def delta_table(self, name: str) -> DeltaLiteTable:
         return DeltaLiteTable(self.spark, self.table_root(self._resolve(name)))
 
-    # ------------------------------------------------------------ view refresh
+    # ------------------------------------------------------------ introspection
+
+    def _snapshots(self, entries: list[TableEntry]) -> dict[str, Snapshot]:
+        """uuid -> snapshot of every readable table: one log replay per
+        table for an introspection builder."""
+        snaps = {}
+        for e in entries:
+            try:
+                snaps[e.uuid] = DeltaLiteTable(
+                    self.spark, self.table_root(e)
+                ).snapshot()
+            except DeltaLiteError:
+                continue
+        return snaps
 
     def _system_tables(self) -> dict[str, DataFrame]:
         """system.table_versions / system.dropped_tables (A21; reference
         src/system_tables.rs:21-292)."""
-        ent = {
-            e.uuid: e for e in self.catalog.tables(self.database)
-        }
+        entries = self.catalog.tables(self.database)
+        ent = {e.uuid: e for e in entries}
+        snaps = self._snapshots(entries)
         tv_rows = [
             Row(
                 table_schema=ent[u].schema if u in ent else None,
@@ -239,11 +294,10 @@ class SeafowlContext:
             "uuid string, database string, schema string, name string, drop_time bigint"
         )
         tf_rows = []
-        for e in self.catalog.tables(self.database):
-            t = DeltaLiteTable(self.spark, self.table_root(e))
-            if not t.exists():
+        for e in entries:
+            if e.uuid not in snaps:
                 continue
-            for fobj in t.snapshot().files:
+            for fobj in snaps[e.uuid].files:
                 tf_rows.append(
                     Row(
                         table_schema=e.schema,
@@ -262,12 +316,9 @@ class SeafowlContext:
         from .matview import MATVIEW_PROP, MvSpec
 
         mv_rows = []
-        for e in self.catalog.tables(self.database):
-            props = self._props_cache.get(e.uuid)
-            if props is None:
-                t = DeltaLiteTable(self.spark, self.table_root(e))
-                props = t.snapshot().properties if t.exists() else {}
-            raw = (props or {}).get(MATVIEW_PROP)
+        for e in entries:
+            snap = snaps.get(e.uuid)
+            raw = ((snap.properties if snap else None) or {}).get(MATVIEW_PROP)
             if not raw:
                 continue
             spec = MvSpec.from_json(raw)
@@ -321,23 +372,15 @@ class SeafowlContext:
         from .search_index import load_specs as _si_load, snapshot_fp as _si_fp
 
         si_rows = []
-        for e in self.catalog.tables(self.database):
-            props = self._props_cache.get(e.uuid)
-            t = None
-            if props is None:
-                t = DeltaLiteTable(self.spark, self.table_root(e))
-                props = t.snapshot().properties if t.exists() else {}
-            specs = _si_load(props or {})
+        for e in entries:
+            snap = snaps.get(e.uuid)
+            specs = _si_load((snap.properties if snap else None) or {})
             if not specs:
                 continue
-            cur_fp = self._snap_fp_cache.get(e.uuid)
-            if cur_fp is None:
-                if t is None:
-                    t = DeltaLiteTable(self.spark, self.table_root(e))
-                try:
-                    cur_fp = _si_fp(t.snapshot())
-                except Exception:  # noqa: BLE001 — broken storage: stale
-                    cur_fp = None
+            try:
+                cur_fp = _si_fp(snap)
+            except Exception:  # noqa: BLE001 — broken storage: stale
+                cur_fp = None
             for n, s in sorted(specs.items()):
                 si_rows.append(
                     Row(
@@ -390,6 +433,7 @@ class SeafowlContext:
         """information_schema.{tables,columns} over the metastore (A20; the
         reference inherits DataFusion's information_schema provider)."""
         entries = self.catalog.tables(self.database)
+        snaps = self._snapshots(entries)
         t_rows = [
             Row(
                 table_catalog=e.database,
@@ -397,7 +441,8 @@ class SeafowlContext:
                 table_name=e.name,
                 table_type=(
                     "VIEW"
-                    if (self._props_cache.get(e.uuid) or {}).get(VIEW_PROP)
+                    if e.uuid in snaps
+                    and (snaps[e.uuid].properties or {}).get(VIEW_PROP)
                     else "BASE TABLE"
                 ),
             )
@@ -421,20 +466,11 @@ class SeafowlContext:
         # log is authoritative); surfacing them here gives the standard
         # table_constraints/check_constraints pair (constraint_type is
         # always CHECK — no PK/FK surface, same as the reference).
-        # reload_views snapshots every table right before calling this —
-        # its per-uuid property capture avoids a second full log replay
-        # per table per statement
         tc_rows, cc_rows = [], []
         for e in entries:
-            if e.uuid in self._props_cache:
-                props = self._props_cache[e.uuid]
-            else:
-                try:
-                    props = DeltaLiteTable(
-                        self.spark, self.table_root(e)
-                    ).snapshot().properties
-                except DeltaLiteError:
-                    continue
+            if e.uuid not in snaps:
+                continue
+            props = snaps[e.uuid].properties or {}
             for cname, expr in (props.get("constraints") or {}).items():
                 tc_rows.append(
                     Row(
@@ -478,51 +514,87 @@ class SeafowlContext:
             ),
         }
 
-    def reload_views(self) -> dict[str, str]:
-        """Register every visible table as temp view(s); returns the mapping
-        qualified-name -> view-name used for query rewriting.
+    # ------------------------------------------------------------ statement closure
 
-        Views registered on a previous reload that are no longer visible
-        (dropped tables, database switch) are deregistered — the same
-        always-fresh-catalog semantics as the reference's reload_schema.
+    def _closure(self, sql: str, names: tuple[str, ...] = ()) -> _Closure:
+        """What ``sql`` reads: the relations Spark's parser finds in it
+        (parser.relation_refs) plus ``names`` (qualified names the caller
+        reads outside the SQL text), resolved case-insensitively against
+        one catalog listing, the staging tables and the system /
+        information_schema names. A view expands depth-first through its
+        stored query, so each table comes after everything it reads.
+
+        A superset is safe: binding an extra table changes no result and
+        hashing one only invalidates more, so CTE names that shadow a
+        table are not subtracted, and "Foo" / foo both resolve to every
+        case variant. A view whose query does not parse, or that sits on
+        a cycle, keeps only the dependencies found so far and fails when
+        bound. Caller holds the engine dialect (_ansi_dialect)."""
+        by_ref: dict[str, list[TableEntry]] = {}
+        for e in self.catalog.tables(self.database):
+            forms = [f"[{e.database}, {e.schema}, {e.name}]", f"[{e.schema}, {e.name}]"]
+            if e.schema == self.search_schema:
+                forms.append(f"[{e.name}]")
+            for f in forms:
+                by_ref.setdefault(f.lower(), []).append(e)
+        staging = {f"[{STAGING_SCHEMA}, {n}]".lower(): n for n in self.staging}
+        staging.update({f"[{n}]".lower(): n for n in self.staging})
+        c = _Closure()
+        seen: set[str] = set()
+
+        def visit(refs: set[str]) -> None:
+            for ref in sorted(refs):
+                if ref in staging:
+                    c.staging.add(staging[ref])
+                if ref in _INTROSPECTION:
+                    c.introspection.add(_INTROSPECTION[ref])
+                for e in by_ref.get(ref, ()):
+                    if e.uuid in seen:
+                        continue
+                    seen.add(e.uuid)
+                    snap = DeltaLiteTable(self.spark, self.table_root(e)).snapshot()
+                    view_sql = (snap.properties or {}).get(VIEW_PROP)
+                    if view_sql is not None:
+                        try:
+                            visit(parser.relation_refs(self._sql_parser, view_sql))
+                        except AnalysisException:  # fails when bound
+                            pass
+                    c.tables.append((e, snap))
+
+        try:
+            refs = parser.relation_refs(self._sql_parser, sql)
+        except AnalysisException:  # spark.sql reports it
+            refs = set()
+        visit(refs | {
+            ("[" + ", ".join(parser.split_name_parts(n)) + "]").lower()
+            for n in names
+        })
+        return c
+
+    def reload_views(self, sql: str) -> tuple[dict[str, str], _Closure]:
+        """Bind exactly what ``sql`` reads — its closure (_closure) — as
+        temp views, dependencies first. Returns the qualified-name ->
+        view-name mapping _rewrite_names applies, and the closure.
+        System / information_schema frames are built only when the
+        statement names one.
+
+        Engine views the previous statement bound and this one does not
+        are dropped, so a reference the closure missed fails as an
+        unresolved relation and never reads a stale plan. A table that
+        fails to bind fails only the statements whose closure holds it.
         """
+        c = self._closure(sql)
         mapping: dict[str, str] = {}
-        self._props_cache = {}
-        self._snap_fp_cache = {}
-        # logical views register AFTER every table/staging/system name is
-        # in the mapping (their defining queries may reference any of
-        # them); catalog order = creation order, so a view over an
-        # earlier view expands too
-        deferred_views: list[tuple[TableEntry, str, str, str | None]] = []
-        entries = self.catalog.tables(self.database)
+        frames: dict[str, DataFrame] = {}  # temp-view name -> plan
+        views: list[tuple[str, list[str]]] = []  # (stored query, names)
         # case-fold sibling groups: when "Foo" and "foo" both exist, only
         # the exact-lowercase one may own the bare temp-view name (the
         # unquoted-reference fold target, PG-style); the sibling stays
-        # reachable through its case-sensitive quoted forms
-        lower_groups: dict[tuple, int] = {}
-        for x in entries:
-            key = (x.schema, x.name.lower())
-            lower_groups[key] = lower_groups.get(key, 0) + 1
-
-        def _casefold_collision(x) -> bool:
-            return (
-                lower_groups[(x.schema, x.name.lower())] > 1
-                and x.name != x.name.lower()
-            )
-
-        for e in entries:
-            t = DeltaLiteTable(self.spark, self.table_root(e))
-            snap = t.snapshot()
-            self._props_cache[e.uuid] = snap.properties
-            if (snap.properties or {}).get("search_indexes"):
-                from .search_index import snapshot_fp as _sfp
-
-                self._snap_fp_cache[e.uuid] = _sfp(snap)
-            view_sql = (snap.properties or {}).get(VIEW_PROP)
+        # reachable through its case-sensitive quoted forms. The closure
+        # resolves case-insensitively, so it holds every sibling.
+        folds = Counter((e.schema, e.name.lower()) for e, _ in c.tables)
+        for e, snap in c.tables:
             mangled = _mangle(e.schema, e.name)
-            if view_sql is None:
-                df = t.to_df(_snap=snap)
-                df.createOrReplaceTempView(mangled)
             mapping[f"{e.schema}.{e.name}"] = mangled
             mapping[f"{e.database}.{e.schema}.{e.name}"] = mangled
             # ANSI double-quoted reference forms, ONLY for names that need
@@ -531,17 +603,12 @@ class SeafowlContext:
             # avoids touching plain double-quoted STRING literals, which
             # Spark SQL still parses as strings). A plain-charset name
             # containing UPPERCASE also needs the quoted forms: "Foo"
-    # and "foo" are distinct case-sensitive identifiers in the
+            # and "foo" are distinct case-sensitive identifiers in the
             # dialect, while Spark's temp-view namespace is
             # case-insensitive — such names get the hash-suffixed mangle
             # and resolve only via the mapping.
-            plain = r"[A-Za-z_][A-Za-z0-9_]*"
-            s_quoted = (
-                not re.fullmatch(plain, e.schema) or e.schema != e.schema.lower()
-            )
-            n_quoted = (
-                not re.fullmatch(plain, e.name) or e.name != e.name.lower()
-            )
+            s_quoted = not re.fullmatch(_PLAIN_NAME, e.schema) or e.schema != e.schema.lower()
+            n_quoted = not re.fullmatch(_PLAIN_NAME, e.name) or e.name != e.name.lower()
             if s_quoted or n_quoted:
                 mapping[f'"{e.schema}"."{e.name}"'] = mangled
             if s_quoted:
@@ -552,163 +619,59 @@ class SeafowlContext:
                     # unqualified quoted reference resolves against the
                     # search schema, like unquoted names do
                     mapping[f'"{e.name}"'] = mangled
-            plain = (
-                e.name
-                if e.schema == self.search_schema
-                and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", e.name)
-                and not _casefold_collision(e)
-                else None
-            )
-            if view_sql is not None:
-                deferred_views.append((e, view_sql, mangled, plain))
-            elif plain:
-                df.createOrReplaceTempView(plain)
-        for name, df in self.staging.items():
-            df.createOrReplaceTempView(name)
-            mapping[f"{STAGING_SCHEMA}.{name}"] = name
-        # system.* / information_schema.* register LAZILY (r14, guide §5/
-        # §1.2): these are driver-built createDataFrames whose rebuild +
-        # re-registration ran on EVERY statement (profiled: 9 frames per
-        # reload, ~26% of q_matview_refresh's statement time) while the
-        # overwhelming majority of statements never read them. The NAMES
-        # go into the rewrite mapping eagerly — the rewriter needs them —
-        # and the frames build the first time a statement's rewritten SQL
-        # actually references one (_ensure_lazy_views), i.e. at the same
-        # catalog state a per-statement eager build would have seen
-        # (reload and execution happen inside one statement, nothing
-        # mutates between them).
-        self._lazy_views = {}
-        for name in _SYSTEM_TABLE_NAMES:
-            mangled = _mangle(SYSTEM_SCHEMA, name)
-            self._lazy_views[mangled] = (SYSTEM_SCHEMA, name)
-            mapping[f"{SYSTEM_SCHEMA}.{name}"] = mangled
-        for name in _INFO_SCHEMA_NAMES:
-            mangled = _mangle("information_schema", name)
-            self._lazy_views[mangled] = ("information_schema", name)
-            mapping[f"information_schema.{name}"] = mangled
-        # fixpoint expansion: catalog order is (schema, name), NOT
-        # dependency order — a view named before one it reads would bind
-        # a stale (or missing) temp view. Every pass expands whatever
-        # now resolves; registered views unlock their dependents on the
-        # next pass; views still failing at the fixpoint are broken.
-        # First, drop ALL deferred views' temp views from the previous
-        # reload so no pass can silently bind a stale plan.
-        for _e, _sql, mangled, plain in deferred_views:
-            for name_ in (mangled, plain):
-                if name_:
-                    try:
-                        self.spark.catalog.dropTempView(name_)
-                    except Exception:
-                        pass
-        # stale temp views from the PREVIOUS reload must go BEFORE the
-        # fixpoint, not after: a renamed base table leaves its old name's
-        # temp view behind (rename is catalog-only, the files survive), and
-        # a view whose defining query references the old name would
-        # otherwise expand against that stale registration and silently
-        # SUCCEED on the first statement after the rename — then fail on
-        # the next. Text-based views must break deterministically when
-        # their name no longer resolves.
-        # Spark's temp-view namespace is case-INSENSITIVE while the set
-        # diff here is case-sensitive: dropping stale 'Foo' when 'foo'
-        # was just registered would remove the NEW view. Compare folded.
-        current = set(mapping.values()) | {
-            e.name for e in entries if e.schema == self.search_schema
-        }
-        current_fold = {c.lower() for c in current}
-        for stale in self._registered_views:
-            if stale.lower() in current_fold:
-                continue
-            try:
-                self.spark.catalog.dropTempView(stale)
-            except Exception:  # noqa: BLE001
-                pass
-        # cheap textual topo-sort first: order views so ones mentioning
-        # another deferred view's name expand after it — the common DAG
-        # then converges in ONE pass and the fixpoint below is only the
-        # fallback (missed textual deps, e.g. quoted forms)
-        names_of: list[set[str]] = []
-        for e, _sql, _m, plain in deferred_views:
-            forms = {f"{e.schema}.{e.name}", f"{e.database}.{e.schema}.{e.name}"}
-            if plain:
-                forms.add(plain)
-            names_of.append(forms)
-        dep_count = []
-        for i, (_e, view_sql, _m, _p) in enumerate(deferred_views):
-            n = 0
-            for j, forms in enumerate(names_of):
-                if j != i and any(
-                    re.search(rf"(?<![\w.]){re.escape(f)}\b", view_sql)
-                    for f in forms
-                ):
-                    n += 1
-            dep_count.append(n)
-        pending = [
-            v for _, v in sorted(
-                zip(dep_count, deferred_views), key=lambda p: p[0]
-            )
-        ]
-        while pending:
-            progressed = False
-            still = []
-            for item in pending:
-                e, view_sql, mangled, plain = item
-                try:
-                    view_rw = self._rewrite_names(view_sql, mapping)
-                    # a logical view over system/info-schema tables must
-                    # materialize its lazy deps before analysis (r14)
-                    self._ensure_lazy_views(view_rw)
-                    df = self.spark.sql(view_rw)
-                    df.createOrReplaceTempView(mangled)
-                    if plain:
-                        df.createOrReplaceTempView(plain)
-                    progressed = True
-                except Exception:
-                    still.append(item)
-            pending = still
-            if not progressed:
-                break
-        for e, view_sql, mangled, plain in pending:
-            # broken view (e.g. a dropped base table): unregister its
-            # names so only statements REFERENCING it fail (with an
-            # unresolved-relation error), not every statement
-            for k in [k for k, v in mapping.items() if v == mangled]:
-                del mapping[k]
-        registered = set(mapping.values()) | {
-            e.name for e in entries if e.schema == self.search_schema
-        }
-        registered_fold = {r.lower() for r in registered}
-        for stale in self._registered_views:
-            # folded comparison: dropTempView resolves case-insensitively
-            if stale.lower() not in registered_fold:
-                self.spark.catalog.dropTempView(stale)
-        self._registered_views = registered
-        self._register_functions()
-        return mapping
-
-    def _ensure_lazy_views(self, rewritten_sql: str) -> None:
-        """Materialize any lazily-registered system/information_schema
-        temp views the REWRITTEN statement references (r14 — see
-        reload_views). Mangled names are unique tokens, so a substring
-        probe is exact; builds happen at most once per reload, at the
-        same catalog state an eager per-statement build saw."""
-        lazy = getattr(self, "_lazy_views", None)
-        if not lazy:
-            return
-        hits = [m for m in lazy if m in rewritten_sql]
-        if not hits:
-            return
-        sys_frames = info_frames = None
-        for mangled in hits:
-            schema_name, name = lazy.pop(mangled)
-            if schema_name == SYSTEM_SCHEMA:
-                if sys_frames is None:
-                    sys_frames = self._system_tables()
-                df = sys_frames[name]
+            names = [mangled]
+            if (
+                e.schema == self.search_schema
+                and re.fullmatch(_PLAIN_NAME, e.name)
+                and (folds[(e.schema, e.name.lower())] == 1 or e.name == e.name.lower())
+            ):
+                names.append(e.name)
+            view_sql = (snap.properties or {}).get(VIEW_PROP)
+            if view_sql is None:
+                df = DeltaLiteTable(self.spark, self.table_root(e)).to_df(_snap=snap)
+                frames.update(dict.fromkeys(names, df))
             else:
-                if info_frames is None:
-                    info_frames = self._information_schema()
-                df = info_frames[name]
-            df.createOrReplaceTempView(mangled)
+                views.append((view_sql, names))
+        for name in sorted(c.staging):
+            frames[name] = self.staging[name]
+            mapping[f"{STAGING_SCHEMA}.{name}"] = name
+        built: dict[str, dict[str, DataFrame]] = {}
+        for schema, name in sorted(c.introspection):
+            if schema not in built:
+                built[schema] = (
+                    self._system_tables()
+                    if schema == SYSTEM_SCHEMA
+                    else self._information_schema()
+                )
+            mangled = _mangle(schema, name)
+            frames[mangled] = built[schema][name]
+            mapping[f"{schema}.{name}"] = mangled
+        # stale plans go BEFORE any view expands: a renamed base table
+        # leaves its old name's temp view behind (rename is catalog-only),
+        # and a view whose query still reads the old name must break, not
+        # bind that plan. Spark's temp-view namespace is case-INSENSITIVE,
+        # so compare folded: dropping stale 'Foo' must not remove 'foo'.
+        keep = {n.lower() for n in frames}
+        for stale in self._registered_views:
+            if stale.lower() not in keep:
+                self.spark.catalog.dropTempView(stale)
+        for name, df in frames.items():
+            df.createOrReplaceTempView(name)
+        self._registered_views = set(frames)
+        for view_sql, names in views:
+            try:
+                df = self.spark.sql(self._rewrite_names(view_sql, mapping))
+            except Exception:  # noqa: BLE001
+                # broken view (e.g. a dropped base table): unmap it so
+                # statements naming it fail with an unresolved relation
+                for k in [k for k, v in mapping.items() if v == names[0]]:
+                    del mapping[k]
+                continue
+            for name in names:
+                df.createOrReplaceTempView(name)
+            self._registered_views.update(names)
+        self._register_functions()
+        return mapping, c
 
     def _rewrite_names(self, sql: str, mapping: dict[str, str]) -> str:
         """Replace qualified table references with mangled view names,
@@ -929,13 +892,12 @@ class SeafowlContext:
                 else:
                     df = t.to_df(timestamp=ts)
             df.createOrReplaceTempView(alias)
-        mapping = self.reload_views()
+        mapping, closure = self.reload_views(sql)
         try:
             # spark.sql analyzes eagerly: the returned plan holds resolved
             # relations, so the per-query snapshot views can be dropped here
             rewritten = self._rewrite_names(sql, mapping)
-            self._ensure_lazy_views(rewritten)
-            self._maybe_prune_scans(rewritten)
+            self._maybe_prune_scans(rewritten, closure)
             return self.spark.sql(rewritten)
         finally:
             for alias, _, _ in travels:
@@ -943,7 +905,7 @@ class SeafowlContext:
             for alias in si_aliases:
                 self.spark.catalog.dropTempView(alias)
 
-    def _maybe_prune_scans(self, sql: str) -> None:
+    def _maybe_prune_scans(self, sql: str, closure: _Closure) -> None:
         """Stats-level scan pruning for iceberg and delta staging tables
         (the reference gets the equivalent from DataFusion's
         PruningPredicate over its providers): iceberg prunes from manifest
@@ -956,6 +918,8 @@ class SeafowlContext:
         conservative (engine/pruning.py): a file is dropped only when its
         manifest column bounds prove no row can match. Everything else
         falls through to the full view registered by reload_views.
+        Candidates are the statement's closure: its staging tables and
+        the base tables it reads (a view stores no rows to prune).
 
         Scale: skips whole data files driver-side from manifest metadata
         before Spark plans the scan — at 100 TB this is the difference
@@ -969,7 +933,8 @@ class SeafowlContext:
         # a bare LIMIT is an over-fetch cap; under ORDER BY it would
         # truncate BEFORE the sort — never push those
         limit_safe = not re.search(r"(?i)\b(ORDER|GROUP|HAVING|WINDOW|DISTINCT)\b", s)
-        for name, (fmt, location, options) in self.staging_specs.items():
+        staged = {n: self.staging_specs[n] for n in closure.staging if n in self.staging_specs}
+        for name, (fmt, location, options) in staged.items():
             if fmt != "table" or not limit_safe:
                 continue
             # remote tables: re-push a bare trailing LIMIT into the remote
@@ -1008,16 +973,24 @@ class SeafowlContext:
             except Exception:
                 continue
             df.createOrReplaceTempView(name)
-        candidates: list[tuple[str, Any]] = []
-        for name, (fmt, location, options) in self.staging_specs.items():
-            if fmt in ("iceberg", "delta", "deltatable"):
-                candidates.append((name, (fmt, location, options)))
-        for e in self.catalog.tables(self.database):
+        candidates: list[tuple[str, Any]] = [
+            (name, spec)
+            for name, spec in staged.items()
+            if spec[0] in ("iceberg", "delta", "deltatable")
+        ]
+        snaps = {}
+        for e, snap in closure.tables:
+            if (snap.properties or {}).get(VIEW_PROP) is not None:
+                continue
             # engine-native tables prune by the footer stats their adds
             # already carry — the read-side twin of DML pruning
-            candidates.append((_mangle(e.schema, e.name), e))
+            snaps[e.uuid] = snap
+            names = [_mangle(e.schema, e.name)]
             if e.schema == self.search_schema:
-                candidates.append((e.name, e))
+                names.append(e.name)
+            # only names this statement bound to e (a case-fold sibling
+            # does not own the bare name)
+            candidates += [(n, e) for n in names if n in self._registered_views]
         for name, spec in candidates:
             pat = re.compile(
                 rf"(?is)^\s*SELECT\s+.*?\sFROM\s+`?{re.escape(name)}`?"
@@ -1050,7 +1023,7 @@ class SeafowlContext:
                 else:
                     df = DeltaLiteTable(
                         self.spark, self.table_root(spec)
-                    ).to_df(predicate_sql=pred)
+                    ).to_df(predicate_sql=pred, _snap=snaps[spec.uuid])
             except Exception:
                 continue  # best-effort: the full view is already registered
             df.createOrReplaceTempView(name)
@@ -1309,7 +1282,7 @@ class SeafowlContext:
         spark_schema = columns_to_schema(stmt.columns)
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in spark_schema.fields),
+            schema_ddl(spark_schema),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -1327,7 +1300,7 @@ class SeafowlContext:
         df = self._exec_query(parser.Statement("query", stmt.query))
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields),
+            schema_ddl(df.schema),
         )
         t = DeltaLiteTable.create(self.spark, self.table_root(entry), df.schema)
         t.append(df, operation="CTAS")
@@ -1507,9 +1480,7 @@ class SeafowlContext:
         )
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            ),
+            schema_ddl(df.schema),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -1610,9 +1581,9 @@ class SeafowlContext:
                 )
             # A replacement whose query references the view being replaced
             # would VALIDATE against the old view's temp registration, then
-            # persist a self-referential defining query that reload_views'
-            # fixpoint can never expand (its own temp view is dropped
-            # first) — silently destroying a working view. Textual check,
+            # persist a self-referential defining query that reload_views
+            # can never expand (its own temp view is dropped first) —
+            # silently destroying a working view. Textual check,
             # same conservative style as the staging guard: a string
             # literal containing the name also rejects, which beats the
             # silent destruction.
@@ -1637,10 +1608,7 @@ class SeafowlContext:
             DeltaLiteTable(self.spark, self.table_root(existing)).drop_data()
         entry = self.catalog.create_table(
             db, schema, name,
-            ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields
-            ),
+            schema_ddl(df.schema),
         )
         t = DeltaLiteTable.create(
             self.spark,
@@ -2387,13 +2355,6 @@ class SeafowlContext:
         )
         self._commit_index_specs(entry, t, specs, "DROP SEARCH INDEX")
 
-    _SEARCH_CALL = re.compile(
-        r"(?i)\bsearch_index\s*\(\s*"
-        r"'((?:[^']|'')*)'\s*,\s*"
-        r"'((?:[^']|'')*)'\s*,\s*"
-        r"'((?:[^']|'')*)'\s*,\s*(\d+)\s*\)"
-    )
-
     def _expand_search_index_calls(self, sql: str) -> tuple[str, list[str]]:
         """Rewrite ``search_index('tbl', 'idx', 'query', k)`` relations to
         temp views holding the top-k lookup result (result_id, score,
@@ -2412,45 +2373,20 @@ class SeafowlContext:
 
         from .search_index import index_dir, load_specs, lookup, lookup_many
 
-        # the CALL's own argument strings are part of the match, but a
-        # search_index(...) TEXT sitting inside an unrelated string
-        # literal (or quoted identifier) must not rewrite. The parser's
-        # quote scanner — the same tokenizer _rewrite_names splits with —
-        # yields every quoted span, so a match is legit iff its
-        # `search_index` token starts OUTSIDE all of them; quote-parity
-        # counting is gone (it misread an apostrophe inside a
-        # double-quoted identifier as a literal boundary).
-        _spans = parser.scan_quotes(sql)
-
-        def _in_literal(pos: int) -> bool:
-            return any(a <= pos < b for _k, a, b in _spans)
-
-        # pass 1: collect legit calls, grouped by (table, index, k)
-        calls: list[tuple[int, str, str, str, int]] = []  # (start, ...)
-        for m in self._SEARCH_CALL.finditer(sql):
-            if _in_literal(m.start()):
-                continue
-            calls.append(
-                (
-                    m.start(),
-                    m.group(1).replace("''", "'"),
-                    m.group(2).replace("''", "'"),
-                    m.group(3).replace("''", "'"),
-                    int(m.group(4)),
-                )
-            )
+        # collect the calls, grouped by (table, index, k)
+        calls = _search_calls(sql)
         groups: dict[tuple[str, str, int], list[int]] = {}
-        for ci, (_s, tbl, idx, _q, k) in enumerate(calls):
+        for ci, (_s, _e, tbl, idx, _q, k) in enumerate(calls):
             groups.setdefault((tbl, idx, k), []).append(ci)
 
         aliases: list[str] = []
-        view_at: dict[int, str] = {}  # match start -> alias
+        view_of: dict[int, str] = {}  # call index -> alias
 
-        def _bind(df, start: int) -> None:
+        def _bind(df, ci: int) -> None:
             alias = f"__sfs_si_{len(aliases)}_{_uuid.uuid4().hex[:8]}"
             df.createOrReplaceTempView(alias)
             aliases.append(alias)
-            view_at[start] = alias
+            view_of[ci] = alias
 
         try:
             for (tbl, idx, k), cis in groups.items():
@@ -2474,24 +2410,24 @@ class SeafowlContext:
                         "INDEX and re-CREATE it"
                     )
                 if len(cis) == 1:
-                    start, _t, _i, qtext, _k = calls[cis[0]]
-                    _bind(lookup(self.spark, path, spec, qtext, k), start)
+                    qtext = calls[cis[0]][4]
+                    _bind(lookup(self.spark, path, spec, qtext, k), cis[0])
                 else:
                     per_slot = lookup_many(
                         self.spark,
                         path,
                         spec,
-                        [(slot, calls[ci][3]) for slot, ci in enumerate(cis)],
+                        [(slot, calls[ci][4]) for slot, ci in enumerate(cis)],
                         k,
                     )
                     for slot, ci in enumerate(cis):
-                        _bind(per_slot[slot], calls[ci][0])
+                        _bind(per_slot[slot], ci)
 
-            def repl(m: re.Match) -> str:
-                alias = view_at.get(m.start())
-                return f"`{alias}`" if alias else m.group(0)
-
-            return self._SEARCH_CALL.sub(repl, sql), aliases
+            out, pos = [], 0
+            for ci, (start, end, *_args) in enumerate(calls):
+                out += [sql[pos:start], f"`{view_of[ci]}`"]
+                pos = end
+            return "".join(out) + sql[pos:], aliases
         except Exception:
             # a later call's failure must not leak the earlier calls'
             # already-registered temp views
@@ -2808,11 +2744,9 @@ class SeafowlContext:
                     f"columns; got: {part.strip()!r}"
                 )
             pk_cols.append(m.group(2))
-        mapping = self.reload_views()
         source_sql = stmt.source_query or f"SELECT * FROM {stmt.source_table}"
-        source_rw = self._rewrite_names(source_sql, mapping)
-        self._ensure_lazy_views(source_rw)
-        src = self.spark.sql(source_rw)
+        mapping, _ = self.reload_views(source_sql)
+        src = self.spark.sql(self._rewrite_names(source_sql, mapping))
         missing = [c for c in pk_cols if c not in src.columns]
         if missing:
             raise ExecutionError(f"MERGE source lacks ON column(s) {missing}")
@@ -2992,10 +2926,17 @@ class SeafowlContext:
     # ------------------------------------------------------------ ETag
 
     def etag_for_query(self, sql: str) -> str:
-        """SHA-256 over the (uuid, version) of every catalog table the query
-        references — the reference hashes scanned Delta table URIs+versions
-        (src/frontend/http.rs:63-105). Text-level reference detection is a
-        conservative superset of the plan walk.
+        """SHA-256 over the (uuid, version) of every table the query reads
+        — the reference hashes scanned Delta table URIs+versions
+        (src/frontend/http.rs:63-105). What it reads is the statement's
+        closure (_closure), the same set reload_views binds: the tables it
+        names, the tables each named view's stored query reads
+        (transitively), and its time-travel and search_index() targets.
+        A query over system.* / information_schema.*, a SHOW / DESCRIBE
+        (the engine answers these from its catalog) and any statement
+        whose closure holds no table read catalog-wide state, so they
+        hash every table's name and latest version plus the
+        dropped-table set.
 
         r10: a query routed through ``search_index()`` additionally mixes
         each referenced index's identity (built_version + artifact file
@@ -3004,43 +2945,35 @@ class SeafowlContext:
         the incidental fact that index DDL commits a table version: a
         REFRESH SEARCH INDEX must flip cached GETs even though the
         table's data files are untouched."""
+        from .search_index import load_specs as _si_load
+
         sql2, travels = parser.extract_time_travel(sql)
-        touched: set[tuple[str, int]] = set()
-        for e in self.catalog.tables(self.database):
-            pats = [rf"\b{e.schema}\.{e.name}\b", rf"\b{e.database}\.{e.schema}\.{e.name}\b"]
-            if e.schema == self.search_schema:
-                pats.append(rf"(?<![A-Za-z0-9_.]){e.name}(?![A-Za-z0-9_.])")
-            if any(re.search(p, sql2, re.IGNORECASE) for p in pats):
-                t = DeltaLiteTable(self.spark, self.table_root(e))
-                touched.add((e.uuid, t.latest_version()))
-        touched_idx: set[tuple[str, str, int, str]] = set()
-        if "search_index" in sql2.lower():
-            from .search_index import load_specs as _si_load
-
-            spans = parser.scan_quotes(sql2)
-
-            def _in_quoted(pos: int) -> bool:
-                return any(a <= pos < b for _k, a, b in spans)
-
-            for m in self._SEARCH_CALL.finditer(sql2):
-                if _in_quoted(m.start()):
-                    continue
-                tbl = m.group(1).replace("''", "'")
-                idx = m.group(2).replace("''", "'")
-                try:
-                    entry = self._resolve(tbl)
-                    t = DeltaLiteTable(self.spark, self.table_root(entry))
-                    touched.add((entry.uuid, t.latest_version()))
-                    spec = _si_load(t.snapshot().properties or {}).get(idx)
-                except Exception:  # noqa: BLE001 — the query itself will
-                    continue  # surface the real unresolved-relation error
-                if spec is not None:
-                    touched_idx.add(
-                        (entry.uuid, idx, spec.built_version, spec.file_fp)
-                    )
+        calls = _search_calls(sql2)
+        with self._exec_lock, self._ansi_dialect():
+            c = self._closure(
+                sql2,
+                (*(name for _a, name, _ts in travels), *(call[2] for call in calls)),
+            )
         h = sha256()
-        for u, v in sorted(touched):
+        for u, v in sorted((e.uuid, snap.version) for e, snap in c.tables):
             h.update(f"{u}@{v};".encode())
+        if c.introspection or not c.tables or re.match(r"(?i)\s*(show|describe)\b", sql2):
+            for e in self.catalog.tables(self.database):
+                vs = DeltaLiteTable(self.spark, self.table_root(e)).versions()
+                h.update(f"{e.schema}.{e.name}={e.uuid}@{vs[-1:]};".encode())
+            for dropped in self.catalog.dropped_tables():
+                h.update(f"dropped {dropped};".encode())
+        snaps = {e.uuid: snap for e, snap in c.tables}
+        touched_idx: set[tuple[str, str, int, str]] = set()
+        for _s, _e, tbl, idx, _q, _k in calls:
+            try:
+                entry = self._resolve(tbl)
+                props = snaps[entry.uuid].properties
+            except Exception:  # noqa: BLE001 — the query itself will
+                continue  # surface the real unresolved-relation error
+            spec = _si_load(props or {}).get(idx)
+            if spec is not None:
+                touched_idx.add((entry.uuid, idx, spec.built_version, spec.file_fp))
         for u, i, bv, fp in sorted(touched_idx):
             h.update(f"{u}:{i}@{bv}:{fp};".encode())
         return h.hexdigest()

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .types import schema_ddl
+
 MAX_ROWS_PER_FILE = 1_048_576  # reference src/config/schema.rs:283
 LOG_DIR = "_log"
 # engage per-file PK-membership pruning above this many coarse-hit rows
@@ -524,13 +526,12 @@ class DeltaLiteTable:
         Python-worker round trip — profiled as the one 32-task stage of
         the first CDC micro-batch (empty merge target), ~7 s of task
         time for zero rows. A constant-folded empty relation plans to
-        zero tasks and lets joins against it see an exact 0-row count."""
-        from ..functions import local_df
-
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+        zero tasks and lets joins against it see an exact 0-row count.
+        Columns cast to the DataType itself: no DDL round trip, so nested
+        field names that need quoting (struct<`my field`: int>) survive."""
+        return self.spark.sql("SELECT 1").where("1 = 0").select(
+            *(F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields)
         )
-        return local_df(self.spark, [], ddl)
 
     def to_df(
         self,
@@ -540,7 +541,7 @@ class DeltaLiteTable:
         _snap: Snapshot | None = None,
     ) -> DataFrame:
         # _snap: caller already resolved the snapshot (reload_views reads
-        # every table per statement — one log replay, not two)
+        # each table it binds once — one log replay, not two)
         snap = _snap if _snap is not None else self.snapshot(version, timestamp)
         schema = T.StructType.fromDDL(snap.schema_ddl)
         files = snap.files
@@ -864,8 +865,7 @@ class DeltaLiteTable:
         t.store.makedirs(t.root)
         if t.exists():
             raise DeltaLiteError(f"table already exists at {root}")
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-        meta: dict = {"schema_ddl": ddl}
+        meta: dict = {"schema_ddl": schema_ddl(schema)}
         if properties:
             by = properties.get("bucket_by")
             if by:
@@ -1385,10 +1385,8 @@ class DeltaLiteTable:
         props = dict(snap.properties)
         if name in zlist:
             props["zorder_by"] = [c for c in zlist if c != name]
-        new_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in schema.fields
-            if f.name != name
+        new_ddl = schema_ddl(
+            T.StructType([f for f in schema.fields if f.name != name])
         )
         props["dropped_columns"] = list(
             (snap.properties.get("dropped_columns") or [])
@@ -2179,7 +2177,7 @@ class DeltaLiteTable:
         if not names:
             raise DeltaLiteError(f"no parquet files to convert in {root}")
         df = spark.read.parquet(t._data_url(names[0]))
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+        ddl = schema_ddl(df.schema)
         adds = []
         for n in names:
             full = os.path.join(t.root, n)

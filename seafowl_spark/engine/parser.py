@@ -10,6 +10,7 @@ Everything else parses into a Statement the executor (context.py) interprets.
 
 from __future__ import annotations
 
+import json
 import re
 import uuid
 from dataclasses import dataclass, field
@@ -169,6 +170,37 @@ def split_on_string_literals(sql: str) -> list[str]:
         pos = b
     parts.append(sql[pos:])
     return parts
+
+
+def relation_refs(sql_parser, sql: str) -> set[str]:
+    """The tables ``sql`` references, from Spark's own parser
+    (``sql_parser``: the session's JVM ParserInterface): one parsePlan,
+    one toJSON, and a walk for every UnresolvedRelation /
+    UnresolvedTableOrView — CTE bodies, scalar / EXISTS / IN subqueries
+    and EXPLAIN / TABLE included. Parse under the engine dialect so
+    double-quoted names read as identifiers.
+
+    Each reference is the identifier as the JSON renders it, lowercased:
+    ``[schema, name]``. That form is lossy — quoting is gone ("Foo" and
+    Foo both give [foo]) and a part holding ", " reads as two parts — so
+    callers match it against rendered catalog names and never split it.
+    Raises whatever the parser raises on invalid SQL."""
+    refs: set[str] = set()
+
+    def walk(node) -> None:
+        if isinstance(node, dict):
+            if node.get("class", "").endswith(
+                (".UnresolvedRelation", ".UnresolvedTableOrView")
+            ):
+                refs.add(node["multipartIdentifier"].lower())
+            for v in node.values():
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+
+    walk(json.loads(sql_parser.parsePlan(sql).toJSON()))
+    return refs
 
 
 def is_read_only(stmt: str) -> bool:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 
 from . import parser
 from .context import SeafowlContext
+from .types import schema_ddl
 
 DEFAULT_CACHE_CONTROL = "max-age=43200, public"  # reference config/schema.rs:263
 QUERY_HEADER = "X-Seafowl-Query"
@@ -363,10 +364,9 @@ class SeafowlHandler(BaseHTTPRequestHandler):
             qualified = f"{schema}.{table}"
             existing = self.ctx.catalog.get_table(self.ctx.database, schema, table)
             if existing is None:
-                ddl = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+                entry = self.ctx.catalog.create_table(
+                    self.ctx.database, schema, table, schema_ddl(df.schema)
                 )
-                entry = self.ctx.catalog.create_table(self.ctx.database, schema, table, ddl)
                 from .deltalite import DeltaLiteTable
 
                 t = DeltaLiteTable.create(spark, self.ctx.table_root(entry), df.schema)

@@ -93,3 +93,28 @@ def columns_to_schema(cols: list[tuple[str, str]]) -> T.StructType:
     return T.StructType(
         [T.StructField(name, parse_sql_type(t), nullable=True) for name, t in cols]
     )
+
+
+
+def _ddl_name(name: str) -> str:
+    if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+        return name
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ddl_type(dt: T.DataType) -> str:
+    if isinstance(dt, T.StructType):
+        fields = (f"{_ddl_name(f.name)}:{_ddl_type(f.dataType)}" for f in dt.fields)
+        return f"struct<{','.join(fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_ddl_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_ddl_type(dt.keyType)},{_ddl_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def schema_ddl(schema: T.StructType) -> str:
+    """The DDL a table stores (read back by T.StructType.fromDDL):
+    simpleString() types with every name that needs it quoted —
+    struct<my field:int>, what simpleString() renders, does not parse."""
+    return ", ".join(f"{_ddl_name(f.name)} {_ddl_type(f.dataType)}" for f in schema.fields)
